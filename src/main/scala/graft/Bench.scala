@@ -15,7 +15,10 @@ object Bench {
     // ENTIRE suite once so every codepath gets its C2 JIT compilation
     // before measurement. Warming everything (rather than a hand-picked
     // subset) keeps the measured numbers defensible: no query is
-    // advantaged over another.
+    // advantaged over another. The measured passes reuse the warm-up's
+    // generated classes only because Sessions sizes Spark's codegen
+    // cache to hold a whole pass; at Spark's default of 100 entries each
+    // pass would recompile and re-JIT them.
     try Tables.all.foreach(t => Tables.df(spark, sfDir, t).count())
     catch { case e: Throwable => System.err.println(s"[bench] table warm-up failed: $e") }
     SparkEntry.queries.foreach { case (name, fn) =>

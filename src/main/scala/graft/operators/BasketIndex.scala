@@ -59,14 +59,6 @@ object BasketIndex {
     * production. */
   private[graft] var onPrunedRead: (String, Seq[Int]) => Unit = (_, _) => ()
 
-  private val debug = sys.env.contains("GRAFT_BASKET_DEBUG")
-  private def timed[T](tag: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (debug) println(f"[basket] $tag%-18s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-    r
-  }
-
   /** Fold one wave of (order, brand) line rows (duplicates fine) into
     * the maintained counts: one bucket-pruned membership read, one
     * atomic grouped commit of fresh memberships + pair/brand/order
@@ -103,11 +95,6 @@ object BasketIndex {
       .cache()
     val fresh = b.join(prior, Seq("ok", "brand"), "left_anti")
       .cache()
-    if (debug) {
-      timed(s"w$waveId b")(b.count())
-      timed(s"w$waveId prior")(prior.count())
-      timed(s"w$waveId fresh")(fresh.count())
-    }
     // pair instances completed by this wave: exactly-one-fresh ∪
     // both-fresh — disjoint (and both-stored was counted by the wave
     // that completed it), expressed as ONE join of fresh against
@@ -131,7 +118,7 @@ object BasketIndex {
     val ordDelta = fresh.select("ok").distinct()
       .join(prior.select("ok").distinct(), Seq("ok"), "left_anti")
       .agg(count(lit(1)).as("c")).select(lit(1).as("k"), col("c"))
-    timed(s"w$waveId commit")(store.appendTables(
+    store.appendTables(
       fresh.withColumn("tbl", lit("mem"))
         .withColumn("gbucket", store.gb(col("ok")))
         .unionByName(pairDelta.withColumn("tbl", lit("pairs"))
@@ -144,7 +131,7 @@ object BasketIndex {
         .unionByName(ordDelta.withColumn("tbl", lit("ords"))
           .withColumn("gbucket", store.gb(col("k"))),
           allowMissingColumns = true),
-      waveId, within = Seq(col("ok"), col("brand"), col("brand_a"))))
+      waveId, within = Seq(col("ok"), col("brand"), col("brand_a")))
     fresh.unpersist()
     prior.unpersist()
   }

@@ -276,8 +276,6 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
 
   private def appendWith(df: DataFrame, batchId: Int, within: Seq[Column],
                          partCols: Seq[String]): Unit = {
-    if (sys.env.contains("GRAFT_STORE_DEBUG"))
-      println(s"[store] appendWith batch=$batchId dir=$dir thread=${Thread.currentThread().getName}")
     checkProtocol()
     def write(target: java.io.File): Unit =
       df.repartition(buckets, col("gbucket"))

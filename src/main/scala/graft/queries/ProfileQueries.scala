@@ -155,8 +155,7 @@ object ProfileQueries {
     Q(
       "q80_zorder_write_manifest",
       (s, dir) => {
-        val out = "/tmp/graft_q80_zorder_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
+        val out = Q.scratch(s, "q80_zorder", dir)
         val data = Tables.lineitem(s, dir)
           .selectExpr("l_partkey % 256 as px", "l_suppkey % 256 as sx")
         graft.operators.ZOrderLayout.writeBucketed(data, "px", "sx", out, 32)

@@ -4,8 +4,8 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The commit-protocol queries (q85/q92 and the round-trip family) do
-  * real filesystem I/O — their scratch root must follow
+/** The commit-protocol queries (q85/q92 and the round-trip family) and
+  * q80's Z-ordered write do real filesystem I/O — their scratch root must follow
   * `spark.graft.scratch.dir` so two concurrent gates against the same
   * scale dir write to disjoint roots instead of colliding on a
   * hard-coded /tmp path.
@@ -37,5 +37,16 @@ class ScratchDirSpec extends AnyFunSuite {
       "q92 (manifest protocol) must produce q85's exact rollup")
     val names = new java.io.File(root).listFiles().map(_.getName)
     assert(names.exists(_.startsWith("graft_q92_manifest_")))
+  }
+
+  test("q80 writes its Z-ordered table under spark.graft.scratch.dir") {
+    val root = Files.createTempDirectory("graft_scratch_").toString
+    val s = TestSpark.spark.newSession()
+    s.conf.set("spark.graft.scratch.dir", root)
+    val out = SparkEntry.queries("q80_zorder_write_manifest")(s, sfDir)
+    assert(out.count() > 0)
+    val names = new java.io.File(root).listFiles().map(_.getName)
+    assert(names.exists(_.startsWith("graft_q80_zorder_")),
+      s"expected q80 output under $root, found ${names.mkString(",")}")
   }
 }
