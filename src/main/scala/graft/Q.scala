@@ -82,6 +82,36 @@ object Q {
     case _ => ()
   }
 
+  /** Drain `source` once: an AvailableNow run that folds everything
+    * available at start through `fold` (foreachBatch, so a replayed
+    * micro-batch carries its original batch id) and records progress in
+    * `ckpt`, so the next drain on the same checkpoint sees only what
+    * arrived since. Returns after the run has finished; a failing `fold`
+    * rethrows as the stream's StreamingQueryException, and a run still
+    * going after 300 s is stopped and reported. */
+  def drain(source: DataFrame, ckpt: String)(
+      fold: (DataFrame, Long) => Unit): Unit = {
+    val q = source.writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch(fold)
+      .start()
+    if (!q.awaitTermination(300000)) {
+      q.stop()
+      throw new IllegalStateException(s"drain of $ckpt did not finish in 300 s")
+    }
+  }
+
+  /** The newest `state=<k>` version under `dir` with `k < id`: the
+    * predecessor a batch-id-versioned stream state folds from, so a
+    * replay of batch `id` reads the same version as its first attempt.
+    * None when `dir` is missing or holds no such version. */
+  def latestBelow(dir: String, id: Long): Option[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("state="))
+      .map(_.stripPrefix("state=").toLong).filter(_ < id)
+      .maxOption.map(k => s"$dir/state=$k")
+
   val Dec: DecimalType = DecimalType(18, 2)
   def dec2(c: Column): Column = c.cast(Dec)
   /** Exact sum of a 2-decimal double column, emitted as double. */

@@ -115,9 +115,11 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
       .where(!col("_deleted"))
       .select(schema.fieldNames.map(col).toSeq: _*)
 
-  /** Continuous ingestion: upsert each micro-batch under its stream
-    * batch id. Checkpoint replay of a batch re-appends the SAME delta
-    * (replace-by-batch-id in [[DeltaStore.append]]), so the sink is
+  /** Continuous ingestion: drain `input` through [[graft.Q.drain]] on
+    * `checkpointDir`, upserting each micro-batch under its stream batch
+    * id, and return once the drain has finished. Checkpoint replay of a
+    * batch re-appends the SAME delta (replace-by-batch-id in
+    * [[DeltaStore.append]]), so the sink is
     * idempotent end-to-end — the exactly-once story without any sink-
     * side transaction log beyond the delta dirs themselves. The batch
     * is deduped on the key (LWW needs (key, batch) uniqueness):
@@ -141,35 +143,26 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
     * the replayed bytes are dead weight, never a double-count. The
     * trade: compaction truncates time travel to the compact point. */
   def sink(input: DataFrame, checkpointDir: String,
-           availableNow: Boolean = true,
            compactEvery: Option[Int] = None,
-           orderCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = input.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // DeltaStore batch ids are Int; a stream epoch past 2^31 must
-        // fail loudly, not wrap negative and corrupt the LWW order
-        require(id <= Int.MaxValue, s"stream batch id $id exceeds Int range")
-        val b = orderCol match {
-          case Some(c) => batch
-            .withColumn("_vrn", row_number().over(
-              Window.partitionBy(keyCols.map(col): _*)
-                .orderBy(col(c).desc_nulls_last)))
-            .where(col("_vrn") === 1).drop("_vrn")
-          case None => batch.dropDuplicates(keyCols)
-        }
-        if (!b.isEmpty) upsert(b, id.toInt)
-        compactEvery.foreach { n =>
-          if (id % n == n - 1) compact(batch.sparkSession,
-            StructType(batch.schema.fields.toSeq))
-        }
+           orderCol: Option[String] = None): Unit =
+    graft.Q.drain(input, checkpointDir) { (batch, id) =>
+      // DeltaStore batch ids are Int; a stream epoch past 2^31 must
+      // fail loudly, not wrap negative and corrupt the LWW order
+      require(id <= Int.MaxValue, s"stream batch id $id exceeds Int range")
+      val b = orderCol match {
+        case Some(c) => batch
+          .withColumn("_vrn", row_number().over(
+            Window.partitionBy(keyCols.map(col): _*)
+              .orderBy(col(c).desc_nulls_last)))
+          .where(col("_vrn") === 1).drop("_vrn")
+        case None => batch.dropDuplicates(keyCols)
       }
-    (if (availableNow) writer.trigger(
-      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
+      if (!b.isEmpty) upsert(b, id.toInt)
+      compactEvery.foreach { n =>
+        if (id % n == n - 1) compact(batch.sparkSession,
+          StructType(batch.schema.fields.toSeq))
+      }
+    }
 
   /** Bucket-pruned snapshot restricted to `keys`' buckets — the point-
     * lookup path: whole deltas whose key bloom excludes every probe

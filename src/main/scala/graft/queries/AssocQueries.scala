@@ -441,8 +441,7 @@ object AssocQueries {
       "q224_triangle_count_incremental",
       (s, dir) => {
         val root = graft.Q.scratch(s, "q224_triidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         val minSupport = 5L
         val os = Tables.lineitem(s, dir)
           .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
@@ -515,8 +514,7 @@ object AssocQueries {
       "q225_stream_triangles",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q225_streamtri", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val minSupport = 5L
         val os = Tables.lineitem(s, dir)
           .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
@@ -537,44 +535,31 @@ object AssocQueries {
           org.apache.spark.sql.types.StructField("u", skType),
           org.apache.spark.sql.types.StructField("v", skType)))
         def latestTotalBelow(id: Long): Long =
-          Option(new java.io.File(s"$out/total").listFiles()).toSeq.flatten
-            .map(_.getName).filter(_.startsWith("state="))
-            .map(_.stripPrefix("state=").toLong).filter(_ < id)
-            .maxOption.map { k =>
-              s.read.parquet(s"$out/total/state=$k").head().getLong(0)
-            }.getOrElse(0L)
-        def drain(): Unit = {
-          val q = s.readStream.schema(eSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // auto-compaction policy at batch start (threshold 0 —
-              // fires under this two-batch gate): only the durably-
-              // committed tail folds; the degree fold is additive, so
-              // the batch's own delta must stay live for replay
-              graft.operators.TriIndex.maybeCompact(s, s"$out/store",
-                maxDeltas = 0, upTo = Some(id.toInt - 1))
-              require(graft.operators.DeltaStore(s"$out/store")
-                .deltaCount(Some(id.toInt - 1)) == 0,
-                "q225: compaction policy left committed deltas live")
-              val delta = graft.operators.TriIndex
-                .foldWave(s, b, s"$out/store", id.toInt)
-              val total = latestTotalBelow(id) + delta
-              s.createDataFrame(
-                  java.util.List.of(org.apache.spark.sql.Row(total)),
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("total",
-                      org.apache.spark.sql.types.LongType))))
-                .coalesce(1).write.mode("overwrite")
-                .parquet(s"$out/total/state=$id")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q225 drain did not finish in 300 s")
+          graft.Q.latestBelow(s"$out/total", id)
+            .map(s.read.parquet(_).head().getLong(0)).getOrElse(0L)
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(eSchema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            // auto-compaction policy at batch start (threshold 0 —
+            // fires under this two-batch gate): only the durably-
+            // committed tail folds; the degree fold is additive, so
+            // the batch's own delta must stay live for replay
+            graft.operators.TriIndex.maybeCompact(s, s"$out/store",
+              maxDeltas = 0, upTo = Some(id.toInt - 1))
+            require(graft.operators.DeltaStore(s"$out/store")
+              .deltaCount(Some(id.toInt - 1)) == 0,
+              "q225: compaction policy left committed deltas live")
+            val delta = graft.operators.TriIndex
+              .foldWave(s, b, s"$out/store", id.toInt)
+            val total = latestTotalBelow(id) + delta
+            s.createDataFrame(
+                java.util.List.of(org.apache.spark.sql.Row(total)),
+                org.apache.spark.sql.types.StructType(Seq(
+                  org.apache.spark.sql.types.StructField("total",
+                    org.apache.spark.sql.types.LongType))))
+              .coalesce(1).write.mode("overwrite")
+              .parquet(s"$out/total/state=$id")
           }
-        }
         edges.where(pmod(hash(col("u"), col("v")), lit(2)) === 0)
           .repartition(2).write.parquet(s"$out/in")
         drain()
@@ -631,48 +616,30 @@ object AssocQueries {
       "q220_stream_skyline",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q220_streamsky", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val parts = Tables.part(s, dir)
           .select("p_partkey", "p_retailprice", "p_size")
-        def latestBelow(id: Long): Option[String] =
-          Option(new java.io.File(s"$out/sky").listFiles()).toSeq.flatten
-            .map(_.getName).filter(_.startsWith("state="))
-            .map(_.stripPrefix("state=").toLong).filter(_ < id)
-            .maxOption.map(k => s"$out/sky/state=$k")
-        def drain(): Unit = {
-          val q = s.readStream.schema(parts.schema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // version-GC policy: everything below the replay
-              // predecessor is unreachable — delete, then assert the
-              // bound (predecessor + at most this batch's own stale
-              // version from a crashed attempt)
-              latestBelow(id).foreach { keep =>
-                Option(new java.io.File(s"$out/sky").listFiles())
-                  .toSeq.flatten
-                  .filter(f => f.getName.startsWith("state=") &&
-                    f.getName.stripPrefix("state=").toLong <
-                      keep.stripPrefix(s"$out/sky/state=").toLong)
-                  .foreach(rm)
-                require(Option(new java.io.File(s"$out/sky").listFiles())
-                  .toSeq.flatten.count(_.getName.startsWith("state=")) <= 2,
-                  "q220: version GC did not bound live state")
-              }
-              val prev = latestBelow(id)
-                .map(s.read.parquet(_)).getOrElse(b.limit(0))
-              graft.operators.Skyline
-                .skyline2d(prev.unionByName(b), "p_retailprice", "p_size")
-                .write.mode("overwrite").parquet(s"$out/sky/state=$id")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(parts.schema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            // version-GC policy: everything below the replay
+            // predecessor is unreachable — delete, then assert the
+            // bound (predecessor + at most this batch's own stale
+            // version from a crashed attempt)
+            graft.Q.latestBelow(s"$out/sky", id).foreach { keep =>
+              Iterator.unfold(keep)(v => graft.Q.latestBelow(s"$out/sky",
+                  v.stripPrefix(s"$out/sky/state=").toLong).map(p => (p, p)))
+                .foreach(p => graft.Q.rmrf(new java.io.File(p)))
+              require(Option(new java.io.File(s"$out/sky").listFiles())
+                .toSeq.flatten.count(_.getName.startsWith("state=")) <= 2,
+                "q220: version GC did not bound live state")
             }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q220 drain did not finish in 300 s")
+            val prev = graft.Q.latestBelow(s"$out/sky", id)
+              .map(s.read.parquet(_)).getOrElse(b.limit(0))
+            graft.operators.Skyline
+              .skyline2d(prev.unionByName(b), "p_retailprice", "p_size")
+              .write.mode("overwrite").parquet(s"$out/sky/state=$id")
           }
-        }
         parts.where(col("p_partkey") % 3 === 0).repartition(2)
           .write.parquet(s"$out/in")
         drain()
@@ -682,7 +649,7 @@ object AssocQueries {
         parts.where(col("p_partkey") % 3 === 2).repartition(2)
           .write.mode("append").parquet(s"$out/in")
         drain()
-        s.read.parquet(latestBelow(Long.MaxValue).get)
+        s.read.parquet(graft.Q.latestBelow(s"$out/sky", Long.MaxValue).get)
           .select("p_partkey", "p_retailprice", "p_size")
           .orderBy("p_partkey")
       },
@@ -1132,8 +1099,7 @@ object AssocQueries {
       "q226_chi2_incremental",
       (s, dir) => {
         val root = graft.Q.scratch(s, "q226_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         // derived ONCE (the q221 move): all three wave filters consume
         // this frame instead of re-scanning events per wave
         val ev = Tables.df(s, dir, "events")
@@ -1173,8 +1139,7 @@ object AssocQueries {
       "q227_stream_chi2",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q227_streamchi2", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val ev = Tables.df(s, dir, "events")
           .where(col("event_type").isin(chi2Types: _*))
           .select(col("event_id"), col("event_type"),
@@ -1184,25 +1149,16 @@ object AssocQueries {
             org.apache.spark.sql.types.StringType),
           org.apache.spark.sql.types.StructField("hi",
             org.apache.spark.sql.types.BooleanType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // auto-compaction policy at batch start: the cell fold is
-              // additive, so only the durably-committed tail may fold
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                chi2CellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, chi2CellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q227 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(inSchema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            // auto-compaction policy at batch start: the cell fold is
+            // additive, so only the durably-committed tail may fold
+            graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+              chi2CellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
+            graft.operators.StatCellIndex.appendBatch(s, b,
+              s"$out/store", id.toInt, chi2CellSchema)
           }
-        }
         ev.where(pmod(hash(col("event_id")), lit(2)) === 0)
           .select("event_type", "hi")
           .repartition(8).write.parquet(s"$out/in")
@@ -1231,8 +1187,7 @@ object AssocQueries {
       "q228_kendall_incremental",
       (s, dir) => {
         val root = graft.Q.scratch(s, "q228_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         val d18 = org.apache.spark.sql.types.DecimalType(18, 0)
         val li = Tables.lineitem(s, dir)
           .select(col("l_orderkey"), col("l_linenumber"),
@@ -1274,8 +1229,7 @@ object AssocQueries {
       "q229_stream_kendall",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q229_streamkendall", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val d18 = org.apache.spark.sql.types.DecimalType(18, 0)
         val li = Tables.lineitem(s, dir)
           .select(col("l_orderkey"), col("l_linenumber"),
@@ -1288,24 +1242,15 @@ object AssocQueries {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("y",
             org.apache.spark.sql.types.LongType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // auto-compaction policy at batch start (q227 discipline)
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                kendallCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, kendallCellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q229 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(inSchema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            // auto-compaction policy at batch start (q227 discipline)
+            graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+              kendallCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
+            graft.operators.StatCellIndex.appendBatch(s, b,
+              s"$out/store", id.toInt, kendallCellSchema)
           }
-        }
         li.where(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(2)) === 0)
           .select("x", "y")
           .repartition(8).write.parquet(s"$out/in")
@@ -1333,8 +1278,7 @@ object AssocQueries {
       "q231_ks_incremental",
       (s, dir) => {
         val root = graft.Q.scratch(s, "q231_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         // derived ONCE (the q221 move): the three wave filters consume
         // this frame instead of re-scanning orders per wave
         val o = Tables.orders(s, dir).select(
@@ -1374,8 +1318,7 @@ object AssocQueries {
       "q232_stream_ks",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q232_streamks", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"),
           when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
@@ -1386,23 +1329,14 @@ object AssocQueries {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("v",
             org.apache.spark.sql.types.LongType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                ksCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, ksCellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q232 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(inSchema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+              ksCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
+            graft.operators.StatCellIndex.appendBatch(s, b,
+              s"$out/store", id.toInt, ksCellSchema)
           }
-        }
         o.where(pmod(hash(col("o_orderkey")), lit(2)) === 0)
           .select("is_a", "v")
           .repartition(8).write.parquet(s"$out/in")
@@ -1433,8 +1367,7 @@ object AssocQueries {
       "q233_mwu_incremental",
       (s, dir) => {
         val root = graft.Q.scratch(s, "q233_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         // derived ONCE (the q221 move)
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"),
@@ -1465,8 +1398,7 @@ object AssocQueries {
       "q234_stream_mwu",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q234_streammwu", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"),
           when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
@@ -1477,23 +1409,14 @@ object AssocQueries {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("v",
             org.apache.spark.sql.types.LongType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                ksCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, ksCellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q234 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(inSchema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+              ksCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
+            graft.operators.StatCellIndex.appendBatch(s, b,
+              s"$out/store", id.toInt, ksCellSchema)
           }
-        }
         o.where(pmod(hash(col("o_orderkey")), lit(2)) === 0)
           .select("is_a", "v")
           .repartition(8).write.parquet(s"$out/in")
@@ -1524,8 +1447,7 @@ object AssocQueries {
       "q235_spearman_incremental",
       (s, dir) => {
         val root = graft.Q.scratch(s, "q235_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         // derived ONCE (the q221 move)
         val li = Tables.lineitem(s, dir).select(
           col("l_orderkey"), col("l_linenumber"),
@@ -1553,8 +1475,7 @@ object AssocQueries {
       "q236_stream_spearman",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q236_streamsp", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val li = Tables.lineitem(s, dir).select(
           col("l_orderkey"), col("l_linenumber"),
           Q.dec2(col("l_quantity")).cast("long").as("x"),
@@ -1564,23 +1485,14 @@ object AssocQueries {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("y",
             org.apache.spark.sql.types.LongType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                kendallCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, kendallCellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q236 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(inSchema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+              kendallCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
+            graft.operators.StatCellIndex.appendBatch(s, b,
+              s"$out/store", id.toInt, kendallCellSchema)
           }
-        }
         li.where(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(2)) === 0)
           .select("x", "y")
           .repartition(8).write.parquet(s"$out/in")
@@ -1606,8 +1518,7 @@ object AssocQueries {
       "q237_benford_incremental",
       (s, dir) => {
         val root = graft.Q.scratch(s, "q237_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         // derived ONCE (the q221 move)
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"),
@@ -1636,8 +1547,7 @@ object AssocQueries {
       "q238_stream_benford",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q238_streambenford", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"),
           substring(
@@ -1646,23 +1556,14 @@ object AssocQueries {
         val inSchema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("digit",
             org.apache.spark.sql.types.IntegerType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                benfordCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, benfordCellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q238 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(inSchema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+              benfordCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
+            graft.operators.StatCellIndex.appendBatch(s, b,
+              s"$out/store", id.toInt, benfordCellSchema)
           }
-        }
         o.where(pmod(hash(col("o_orderkey")), lit(2)) === 0)
           .select("digit")
           .repartition(8).write.parquet(s"$out/in")
@@ -1693,8 +1594,7 @@ object AssocQueries {
       "q239_ab_incremental",
       (s, dir) => {
         val root = graft.Q.scratch(s, "q239_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         // derived ONCE (the q221 move)
         val ev = Tables.df(s, dir, "events").select(
           col("event_id"), col("user_id"),
@@ -1723,8 +1623,7 @@ object AssocQueries {
       "q240_stream_ab",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q240_streamab", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val ev = Tables.df(s, dir, "events").select(
           col("event_id"), col("user_id"),
           when(col("event_type") === "purchase", 1L).otherwise(0L).as("is_p"))
@@ -1733,23 +1632,14 @@ object AssocQueries {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("is_p",
             org.apache.spark.sql.types.LongType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                abCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, abCellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q240 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(inSchema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+              abCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
+            graft.operators.StatCellIndex.appendBatch(s, b,
+              s"$out/store", id.toInt, abCellSchema)
           }
-        }
         ev.where(pmod(hash(col("event_id")), lit(2)) === 0)
           .select("user_id", "is_p")
           .repartition(8).write.parquet(s"$out/in")
@@ -1780,8 +1670,7 @@ object AssocQueries {
       "q241_concentration_incremental",
       (s, dir) => {
         val root = graft.Q.scratch(s, "q241_moments", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         // derived ONCE (the q221 move)
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"), col("o_custkey").as("ck"),
@@ -1808,8 +1697,7 @@ object AssocQueries {
       "q242_stream_concentration",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q242_streamconc", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"), col("o_custkey").as("ck"),
           (Q.dec2(col("o_totalprice")) * 100).cast("long").as("rev_c"))
@@ -1818,24 +1706,15 @@ object AssocQueries {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("rev_c",
             org.apache.spark.sql.types.LongType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompactAgg(s, s"$out/store",
-                revMomentSchema, Seq("rev_c"), maxDeltas = 0,
-                upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendAgg(s, b,
-                s"$out/store", id.toInt, revMomentSchema, Seq("rev_c"))
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q242 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(inSchema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            graft.operators.StatCellIndex.maybeCompactAgg(s, s"$out/store",
+              revMomentSchema, Seq("rev_c"), maxDeltas = 0,
+              upTo = Some(id.toInt - 1))
+            graft.operators.StatCellIndex.appendAgg(s, b,
+              s"$out/store", id.toInt, revMomentSchema, Seq("rev_c"))
           }
-        }
         o.where(pmod(hash(col("o_orderkey")), lit(2)) === 0)
           .select("ck", "rev_c")
           .repartition(8).write.parquet(s"$out/in")
@@ -1865,8 +1744,7 @@ object AssocQueries {
       "q245_basket_incremental",
       (s, dir) => {
         val root = graft.Q.scratch(s, "q245_basket", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         // derived ONCE (the q221 move): all three wave filters consume
         // this frame; without the cut every wave re-ran the lineitem
         // scan + brand broadcast join
@@ -1899,8 +1777,7 @@ object AssocQueries {
       "q246_stream_basket",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q246_streambasket", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         // derived ONCE (the q221 move): both wave writes filter this
         // frame instead of re-running the scan + brand join
         val lines = Tables.lineitem(s, dir)
@@ -1916,23 +1793,14 @@ object AssocQueries {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("brand",
             org.apache.spark.sql.types.StringType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.BasketIndex.maybeCompact(s, s"$out/store",
-                maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.BasketIndex.appendWave(s, b,
-                s"$out/store", id.toInt)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q246 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(inSchema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            graft.operators.BasketIndex.maybeCompact(s, s"$out/store",
+              maxDeltas = 0, upTo = Some(id.toInt - 1))
+            graft.operators.BasketIndex.appendWave(s, b,
+              s"$out/store", id.toInt)
           }
-        }
         lines.where(pmod(hash(col("ok"), col("ln")), lit(2)) === 0)
           .select("ok", "brand")
           .repartition(8).write.parquet(s"$out/in")
@@ -1973,8 +1841,7 @@ object AssocQueries {
       "q214_skyline_incremental",
       (s, dir) => {
         val root = graft.Q.scratch(s, "q214_skyidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         val parts = Tables.part(s, dir)
           .select("p_partkey", "p_retailprice", "p_size")
         // waves by key parity — NOT time/value-ordered: the fold

@@ -254,8 +254,7 @@ object ExtraQueries {
       "q121_stream_asof_enrich",
       (s, dir) => {
         val out = Q.scratch(s, "q121_streamasof", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val ev = Tables.events(s, dir).select("event_id", "user_id", "ts")
         ev.repartition(4).write.parquet(s"$out/in")
         val winner = org.apache.spark.sql.expressions.Window
@@ -267,21 +266,13 @@ object ExtraQueries {
           .select(col("o_custkey"), col("o_orderdate"),
             col("o_orderkey").as("asof_orderkey"),
             col("o_totalprice").as("asof_totalprice"))
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "2").parquet(s"$out/in")
-          .writeStream
-          .option("checkpointLocation", s"$out/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            AsOfJoin.asofBackwardBroadcast(b, orders,
-                "user_id", "o_custkey", "ts", "o_orderdate",
-                Seq("asof_orderkey", "asof_totalprice"))
-              .write.mode("append").parquet(s"$out/enriched")
-          }
-          .start()
-        if (!q.awaitTermination(300000)) {
-          q.stop()
-          throw new IllegalStateException("q121 drain did not finish in 300 s")
+        graft.Q.drain(s.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", "2").parquet(s"$out/in"),
+            s"$out/ckpt") { (b, _) =>
+          AsOfJoin.asofBackwardBroadcast(b, orders,
+              "user_id", "o_custkey", "ts", "o_orderdate",
+              Seq("asof_orderkey", "asof_totalprice"))
+            .write.mode("append").parquet(s"$out/enriched")
         }
         s.read.parquet(s"$out/enriched")
           .select("event_id", "user_id", "ts", "asof_orderkey", "asof_totalprice")
@@ -369,8 +360,7 @@ object ExtraQueries {
       "q187_stream_asof_salted",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q187_streamasof", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val ev = Tables.events(s, dir).select("event_id", "user_id", "ts")
         val winner = org.apache.spark.sql.expressions.Window
           .partitionBy("o_custkey", "o_orderdate")
@@ -381,25 +371,16 @@ object ExtraQueries {
           .select(col("o_custkey"), col("o_orderdate"),
             col("o_orderkey").as("asof_orderkey"),
             col("o_totalprice").as("asof_totalprice"))
-        def drain(): Unit = {
-          val q = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              AsOfJoin.asofSalted(b, orders,
-                  "user_id", "o_custkey", "ts", "o_orderdate",
-                  payload = Seq("asof_orderkey", "asof_totalprice"),
-                  buckets = 8)
-                .write.mode("append").parquet(s"$out/joined")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q187 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(ev.schema)
+              .option("maxFilesPerTrigger", "1").parquet(s"$out/in"),
+              s"$out/ckpt") { (b, _) =>
+            AsOfJoin.asofSalted(b, orders,
+                "user_id", "o_custkey", "ts", "o_orderdate",
+                payload = Seq("asof_orderkey", "asof_totalprice"),
+                buckets = 8)
+              .write.mode("append").parquet(s"$out/joined")
           }
-        }
         ev.where(col("event_id") % 2 === 0).repartition(2)
           .write.parquet(s"$out/in")
         drain()
@@ -1342,8 +1323,7 @@ object ExtraQueries {
       (s, dir) => {
         import graft.functions.DotProductF
         val out = Q.scratch(s, "q114_ivflists", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val cLit = SimilarityQueries.adaptiveWidthLit(
           SimilarityQueries.embCount(s, dir), 64)
         // derived ONCE (the q221 move): four batch filters + the final
@@ -1493,8 +1473,7 @@ object ExtraQueries {
         import org.apache.spark.sql.expressions.Window
         import graft.operators.SketchIndex
         val out = Q.scratch(s, "q181_sketchidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         // derived ONCE (the q221 move): four batch filters consume the
         // events scan — materialize once, filter blocks
         val ev = Tables.events(s, dir).localCheckpoint()
@@ -1528,25 +1507,15 @@ object ExtraQueries {
         import org.apache.spark.sql.expressions.Window
         import graft.operators.SketchIndex
         val out = Q.scratch(s, "q183_streamsketch", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val ev = Tables.events(s, dir)
         val in = ev.select("event_id", "event_type", "user_id", "value")
-        def drain(): Unit = {
-          val q = s.readStream.schema(in.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-              SketchIndex.appendBatch(s, b, s"$out/state", bid.toInt)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q183 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(in.schema)
+              .option("maxFilesPerTrigger", "1").parquet(s"$out/in"),
+              s"$out/ckpt") { (b, bid) =>
+            SketchIndex.appendBatch(s, b, s"$out/state", bid.toInt)
           }
-        }
         in.where(col("event_id") % 2 === 0).repartition(2)
           .write.parquet(s"$out/in")
         drain()

@@ -1208,8 +1208,7 @@ $selects
       "q243_corr_incremental",
       (s, dir) => {
         val root = Q.scratch(s, "q243_moments", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         // project THEN pin (the r18 deferral condition now holds): the
         // wave filter needs only a 1-int wave key and the addends only
         // the 4 measure columns, so the checkpoint is 5 narrow columns
@@ -1238,8 +1237,7 @@ $selects
       "q244_stream_corr",
       (s, dir) => {
         val out = Q.scratch(s, "q244_streamcorr", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val li = Tables.lineitem(s, dir)
         // the stream carries RAW measure rows (the production shape —
         // and 4 narrow doubles, not 15 wide decimal addends, so the
@@ -1248,25 +1246,16 @@ $selects
         val inSchema = org.apache.spark.sql.types.StructType(
           corrCols.map(c => org.apache.spark.sql.types.StructField(c,
             org.apache.spark.sql.types.DoubleType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompactAgg(s, s"$out/store",
-                corrMomentSchema, corrValueCols, maxDeltas = 0,
-                upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendAgg(s,
-                b.select(corrRowExprs: _*),
-                s"$out/store", id.toInt, corrMomentSchema, corrValueCols)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q244 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(inSchema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            graft.operators.StatCellIndex.maybeCompactAgg(s, s"$out/store",
+              corrMomentSchema, corrValueCols, maxDeltas = 0,
+              upTo = Some(id.toInt - 1))
+            graft.operators.StatCellIndex.appendAgg(s,
+              b.select(corrRowExprs: _*),
+              s"$out/store", id.toInt, corrMomentSchema, corrValueCols)
           }
-        }
         // project THEN pin (the q243 move): both landing writes filter
         // a 5-narrow-column checkpoint instead of re-scanning lineitem
         val src = li

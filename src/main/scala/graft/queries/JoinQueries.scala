@@ -456,8 +456,7 @@ object JoinQueries {
       (s, dir) => {
         import graft.operators.BandJoin
         val out = graft.Q.scratch(s, "q152_streamband", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val W = 86400000000L // 24 h in micros
         val ev = Tables.df(s, dir, "events")
           .selectExpr("event_id", "user_id",
@@ -465,28 +464,19 @@ object JoinQueries {
         val purch = ev.where(col("event_type") === "purchase")
           .select(col("user_id").as("p_user"),
             col("event_id").as("purchase_id"), col("t_us").as("p_us"))
-        def drain(): Unit = {
-          val q = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              // event e attributes to purchase p iff t_e − t_p ∈ (0, W]
-              // ⇔ t_p − t_e ∈ (−W−1, −1] on integer micros (q147's
-              // exact reversal)
-              BandJoin.bandJoinBroadcast(b, purch,
-                  "user_id", "p_user", "t_us", "p_us",
-                  lo = -W - 1, hi = -1, payload = Seq("purchase_id"))
-                .select("purchase_id", "event_type")
-                .write.mode("append").parquet(s"$out/pairs")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q152 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(ev.schema)
+              .option("maxFilesPerTrigger", "1").parquet(s"$out/in"),
+              s"$out/ckpt") { (b, _) =>
+            // event e attributes to purchase p iff t_e − t_p ∈ (0, W]
+            // ⇔ t_p − t_e ∈ (−W−1, −1] on integer micros (q147's
+            // exact reversal)
+            BandJoin.bandJoinBroadcast(b, purch,
+                "user_id", "p_user", "t_us", "p_us",
+                lo = -W - 1, hi = -1, payload = Seq("purchase_id"))
+              .select("purchase_id", "event_type")
+              .write.mode("append").parquet(s"$out/pairs")
           }
-        }
         // wave 1 → drain → wave 2 appended → SECOND start on the SAME
         // checkpoint (the resume: only wave 2's files are new)
         ev.where(col("event_id") % 2 === 0).repartition(2)
@@ -527,8 +517,7 @@ object JoinQueries {
       (s, dir) => {
         import graft.operators.BandJoin
         val out = graft.Q.scratch(s, "q161_streamband", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val W = 86400000000L // 24 h in micros
         val ev = Tables.df(s, dir, "events")
           .selectExpr("event_id", "user_id",
@@ -536,27 +525,18 @@ object JoinQueries {
         val purch = ev.where(col("event_type") === "purchase")
           .select(col("user_id").as("p_user"),
             col("event_id").as("purchase_id"), col("t_us").as("p_us"))
-        def drain(): Unit = {
-          val q = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              // same band reversal as q152 (t_p − t_e ∈ (−W−1, −1]),
-              // but through the co-partitioned sort-merge exec
-              BandJoin.bandJoinNative(b, purch,
-                  "user_id", "p_user", "t_us", "p_us",
-                  lo = -W - 1, hi = -1, payload = Seq("purchase_id"))
-                .select("purchase_id", "event_type")
-                .write.mode("append").parquet(s"$out/pairs")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q161 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(ev.schema)
+              .option("maxFilesPerTrigger", "1").parquet(s"$out/in"),
+              s"$out/ckpt") { (b, _) =>
+            // same band reversal as q152 (t_p − t_e ∈ (−W−1, −1]),
+            // but through the co-partitioned sort-merge exec
+            BandJoin.bandJoinNative(b, purch,
+                "user_id", "p_user", "t_us", "p_us",
+                lo = -W - 1, hi = -1, payload = Seq("purchase_id"))
+              .select("purchase_id", "event_type")
+              .write.mode("append").parquet(s"$out/pairs")
           }
-        }
         ev.where(col("event_id") % 2 === 0).repartition(2)
           .write.parquet(s"$out/in")
         drain()
@@ -599,8 +579,7 @@ object JoinQueries {
           // a fresh JVM starts a fresh in-memory metastore, but the
           // warehouse dir persists across runs — clear it or the
           // CREATE refuses (the BucketedJoinSpec lesson)
-          def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-          rm(new java.io.File(s"spark-warehouse/$n"))
+          graft.Q.rmrf(new java.io.File(s"spark-warehouse/$n"))
         }
         Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_totalprice")

@@ -550,8 +550,7 @@ object PipelineQueries {
       "q85_incremental_rollup_replay",
       (s, dir) => {
         val out = scratch(s, "q85_rollup", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q112 move): the year
@@ -887,8 +886,7 @@ object PipelineQueries {
       "q96_jsonl_roundtrip",
       (s, dir) => {
         val out = scratch(s, "q96_jsonl", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         Tables.documents(s, dir)
           .write.mode("overwrite").option("compression", "gzip").json(out)
         val back = s.read
@@ -934,8 +932,7 @@ object PipelineQueries {
       "q97_bloom_indexed_lookup",
       (s, dir) => {
         val out = scratch(s, "q97_bloomidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         graft.operators.BloomIndex.write(
           Tables.documents(s, dir), layoutCol = "source", keyCol = "doc_id",
           dir = out, nFiles = 16, expectedPerFile = 100000L, fpp = 0.01)
@@ -1002,8 +999,7 @@ object PipelineQueries {
       "q91_orc_roundtrip",
       (s, dir) => {
         val out = scratch(s, "q91_orc", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         Tables.lineitem(s, dir)
           .select("l_returnflag", "l_linestatus", "l_quantity",
             "l_extendedprice", "l_shipdate")
@@ -1047,8 +1043,7 @@ object PipelineQueries {
       "q92_manifest_rollup_replay",
       (s, dir) => {
         val out = scratch(s, "q92_manifest", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q112/q85 move) —
@@ -1125,8 +1120,7 @@ object PipelineQueries {
       "q100_index_intersection_scan",
       (s, dir) => {
         val out = scratch(s, "q100_idx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val data = Tables.lineitem(s, dir).selectExpr(
           "l_partkey % 256 as px", "l_suppkey % 256 as sx",
           "l_orderkey as okey", "l_quantity as qty",
@@ -1176,8 +1170,7 @@ object PipelineQueries {
       "q105_mor_rollup_replay",
       (s, dir) => {
         val out = scratch(s, "q105_mor", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q85/q92 move): the
@@ -1258,8 +1251,7 @@ object PipelineQueries {
       "q106_mor_delete_time_travel",
       (s, dir) => {
         val out = scratch(s, "q106_mor", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q85/q92 move); the
@@ -1360,8 +1352,7 @@ object PipelineQueries {
       "q107_mor_point_lookup",
       (s, dir) => {
         val out = scratch(s, "q107_mor", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q85/q92 move)
@@ -1422,8 +1413,7 @@ object PipelineQueries {
       "q108_incremental_stats",
       (s, dir) => {
         val out = scratch(s, "q108_stats", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val orders = Tables.orders(s, dir)
         val cols = Seq("o_orderkey", "o_custkey", "o_totalprice")
         val store = graft.operators.DeltaStore(out + "/stats", 4)
@@ -1479,8 +1469,7 @@ object PipelineQueries {
       "q110_mor_change_feed",
       (s, dir) => {
         val out = scratch(s, "q110_mor", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q85/q92 move); the
@@ -1545,8 +1534,7 @@ object PipelineQueries {
       "q111_mor_bloom_lookup",
       (s, dir) => {
         val out = scratch(s, "q111_mor", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q85/q92 move)
@@ -1614,8 +1602,7 @@ object PipelineQueries {
       "q112_incremental_view_from_feed",
       (s, dir) => {
         val out = scratch(s, "q112_ivm", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached — the year filter is a
@@ -1718,8 +1705,7 @@ object PipelineQueries {
       "q115_stream_cdc_view",
       (s, dir) => {
         val out = scratch(s, "q115_scdc", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // one grouped pass, cached (the q112 move): the year filter is
@@ -1749,15 +1735,13 @@ object PipelineQueries {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
         val applies = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
-        def drain(): org.apache.spark.sql.streaming.StreamingQuery =
-          s.readStream.schema(schema)
-          // per-drop micro-batches: each landed file is one complete
-          // ingest unit and must keep its OWN batch id (prices and the
-          // LWW winner depend on it)
-          .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-          .writeStream
-          .option("checkpointLocation", s"$out/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(schema)
+              // per-drop micro-batches: each landed file is one complete
+              // ingest unit and must keep its OWN batch id (prices and
+              // the LWW winner depend on it)
+              .option("maxFilesPerTrigger", "1").parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
             val bid = id.toInt
             mor.upsert(b.dropDuplicates("coin_id", "fetch_date"), bid)
             applies += Future {
@@ -1769,18 +1753,7 @@ object PipelineQueries {
                     col("op"), col("price_usd")),
                 Seq("coin_id", "yr", "mon"), "price_usd", bid)
             }
-            ()
           }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        def awaitDrain(tag: String): Unit = {
-          val q = drain()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException(
-              s"q115 drain $tag did not finish within 300 s")
-          }
-        }
         // drop with a PINNED, strictly-increasing mtime: the file
         // source orders ties by (timestamp, path) and part-file names
         // are random uuids, so explicit stamps make the drop -> batch-id
@@ -1805,9 +1778,9 @@ object PipelineQueries {
         // second query run resumes the SAME checkpoint) with the fixed
         // per-run startup paid twice, not per drop
         drop(windows(0)._1, windows(0)._2, 0)
-        awaitDrain("first")
+        drain()
         (1 to 3).foreach(b => drop(windows(b)._1, windows(b)._2, b))
-        awaitDrain("resume")
+        drain()
         applies.foreach(Await.result(_,
           scala.concurrent.duration.Duration.Inf))
         base.unpersist(false)
@@ -1863,8 +1836,7 @@ object PipelineQueries {
       "q145_stream_dedup_replay",
       (s, dir) => {
         val out = scratch(s, "q145_sdedup", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val ev = Tables.events(s, dir)
           .select("event_id", "ts", "user_id", "event_type", "value")
         ev.repartition(3).write.parquet(s"$out/in")
@@ -1878,16 +1850,8 @@ object PipelineQueries {
             .option("maxFilesPerTrigger", "2").parquet(s"$out/in")
             .withColumn("wmts", col("ts").cast("timestamp")),
           "wmts", "3650 days", Seq("event_id"))
-        val q = deduped.writeStream
-          .option("checkpointLocation", s"$out/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.drop("wmts").write.mode("append").parquet(s"$out/deduped")
-          }
-          .start()
-        if (!q.awaitTermination(300000)) {
-          q.stop()
-          throw new IllegalStateException("q145 drain did not finish in 300 s")
+        graft.Q.drain(deduped, s"$out/ckpt") { (b, _) =>
+          b.drop("wmts").write.mode("append").parquet(s"$out/deduped")
         }
         s.read.parquet(s"$out/deduped")
           .select("event_id", "ts", "user_id", "event_type", "value")
@@ -2166,8 +2130,7 @@ object PipelineQueries {
       "q170_stream_decontamination",
       (s, dir) => {
         val out = Q.scratch(s, "q170_streamdecon", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val docs = Tables.documents(s, dir)
         val evalTris = docs.where(col("doc_id") % 97 === 0)
           .withColumn("toks", expr(toksExpr))
@@ -2175,31 +2138,22 @@ object PipelineQueries {
           .distinct().withColumn("hit", lit(1L))
         val train = docs.where(col("doc_id") % 97 =!= 0)
           .select("doc_id", "text")
-        def drain(): Unit = {
-          val q = s.readStream.schema(train.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              b.withColumn("toks", expr(toksExpr))
-                .select(col("doc_id"), explode(expr(trisExpr)).as("tri"))
-                .join(broadcast(evalTris), Seq("tri"), "left")
-                .groupBy("doc_id")
-                .agg(count(lit(1)).as("n_tris"),
-                  sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-                .withColumn("contamination_q",
-                  floor(col("n_hits").cast("double") / col("n_tris").cast("double")
-                    * lit(1000000.0) + lit(0.5)).cast("bigint"))
-                .where(col("contamination_q") < 50000)
-                .write.mode("append").parquet(s"$out/kept")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q170 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(train.schema)
+              .option("maxFilesPerTrigger", "1").parquet(s"$out/in"),
+              s"$out/ckpt") { (b, _) =>
+            b.withColumn("toks", expr(toksExpr))
+              .select(col("doc_id"), explode(expr(trisExpr)).as("tri"))
+              .join(broadcast(evalTris), Seq("tri"), "left")
+              .groupBy("doc_id")
+              .agg(count(lit(1)).as("n_tris"),
+                sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+              .withColumn("contamination_q",
+                floor(col("n_hits").cast("double") / col("n_tris").cast("double")
+                  * lit(1000000.0) + lit(0.5)).cast("bigint"))
+              .where(col("contamination_q") < 50000)
+              .write.mode("append").parquet(s"$out/kept")
           }
-        }
         // wave 1 → drain → wave 2 appended → SECOND start, SAME checkpoint
         train.where(col("doc_id") % 2 === 0).repartition(2)
           .write.parquet(s"$out/in")
@@ -2388,8 +2342,7 @@ object PipelineQueries {
       "q176_partition_pruned_scan",
       (s, dir) => {
         val out = Q.scratch(s, "q176_part", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         Tables.documents(s, dir)
           .write.partitionBy("lang").parquet(out)
         s.read.parquet(out)

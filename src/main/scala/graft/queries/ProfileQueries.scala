@@ -303,37 +303,27 @@ object ProfileQueries {
       "q212_stream_integrity",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q212_streamintegrity", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val ev = Tables.df(s, dir, "events").selectExpr("event_id", "user_id")
         val parents = Tables.customer(s, dir)
           .select(col("c_custkey").as("k")).distinct()
-        def drain(): Unit = {
-          val q = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // State keyed by the STREAMING batch id and written with
-              // overwrite: foreachBatch is at-least-once, so a replayed
-              // micro-batch REWRITES its own contribution instead of
-              // double-counting it (the q216/q220 idempotence pattern —
-              // a bare append would inflate n_rows on replay).
-              b.select(col("user_id").as("k"))
-                .groupBy("k").agg(count(lit(1)).as("n_rows"))
-                .join(broadcast(parents.withColumn("__p", lit(1))),
-                  Seq("k"), "left")
-                .select(col("k"), col("n_rows"),
-                  col("__p").isNull.as("orphan"))
-                .write.mode("overwrite").parquet(s"$out/keys/batch=$id")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q212 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(ev.schema)
+              .option("maxFilesPerTrigger", "1").parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            // State keyed by the STREAMING batch id and written with
+            // overwrite: foreachBatch is at-least-once, so a replayed
+            // micro-batch REWRITES its own contribution instead of
+            // double-counting it (the q216/q220 idempotence pattern —
+            // a bare append would inflate n_rows on replay).
+            b.select(col("user_id").as("k"))
+              .groupBy("k").agg(count(lit(1)).as("n_rows"))
+              .join(broadcast(parents.withColumn("__p", lit(1))),
+                Seq("k"), "left")
+              .select(col("k"), col("n_rows"),
+                col("__p").isNull.as("orphan"))
+              .write.mode("overwrite").parquet(s"$out/keys/batch=$id")
           }
-        }
         ev.where(col("event_id") % 2 === 0).repartition(2)
           .write.parquet(s"$out/in")
         drain()

@@ -1038,8 +1038,7 @@ object SimilarityQueries {
       "q219_dedup_components_incremental",
       (s, dir) => {
         val root = graft.Q.scratch(s, "q219_ccidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        graft.Q.rmrf(new java.io.File(root))
         val names = blockedNames(s, dir)
         // land the pair derivation ONCE: each wave's fold evaluates its
         // edge frame several times (bucket collects + condense joins),
@@ -1113,8 +1112,7 @@ object SimilarityQueries {
       "q221_stream_dedup_components",
       (s, dir) => {
         val out = graft.Q.scratch(s, "q221_streamcc", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val names = blockedNames(s, dir)
         // derived once, landed once (two wave writes filter it)
         val pairs = names.as("a").join(names.as("b"),
@@ -1122,29 +1120,20 @@ object SimilarityQueries {
               levenshtein(col("a.p_name"), col("b.p_name")) <= 2)
           .select(col("a.p_name").as("name_a"), col("b.p_name").as("name_b"))
           .localCheckpoint()
-        def drain(): Unit = {
-          val q = s.readStream.schema(pairs.schema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // auto-compaction policy at batch start (threshold 0 so
-              // it fires under this two-batch gate): folds only the
-              // durably-committed tail — the batch's own delta stays
-              // live for the bit-identical replay contract
-              graft.operators.CcIndex.maybeCompact(s, s"$out/store",
-                maxDeltas = 0, upTo = Some(id.toInt - 1))
-              require(graft.operators.DeltaStore(s"$out/store")
-                .deltaCount(Some(id.toInt - 1)) == 0,
-                "q221: compaction policy left committed deltas live")
-              graft.operators.CcIndex.appendWave(s, b, s"$out/store", id.toInt)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q221 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(pairs.schema).parquet(s"$out/in"),
+              s"$out/ckpt") { (b, id) =>
+            // auto-compaction policy at batch start (threshold 0 so
+            // it fires under this two-batch gate): folds only the
+            // durably-committed tail — the batch's own delta stays
+            // live for the bit-identical replay contract
+            graft.operators.CcIndex.maybeCompact(s, s"$out/store",
+              maxDeltas = 0, upTo = Some(id.toInt - 1))
+            require(graft.operators.DeltaStore(s"$out/store")
+              .deltaCount(Some(id.toInt - 1)) == 0,
+              "q221: compaction policy left committed deltas live")
+            graft.operators.CcIndex.appendWave(s, b, s"$out/store", id.toInt)
           }
-        }
         pairs.where(pmod(hash(col("name_a"), col("name_b")), lit(2)) === 0)
           .repartition(2).write.parquet(s"$out/in")
         drain()
@@ -1521,8 +1510,7 @@ object SimilarityQueries {
       "q103_incremental_lsh_dedup",
       (s, dir) => {
         val out = Q.scratch(s, "q103_lshidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         // scanned ONCE (the q221 move): four batch slices re-read the
         // text table otherwise
         val docs = Tables.documents(s, dir).localCheckpoint()
@@ -1625,8 +1613,7 @@ object SimilarityQueries {
       "q104_incremental_embedding_neardup",
       (s, dir) => {
         val out = Q.scratch(s, "q104_embidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val r = adaptiveWidthLit(embCount(s, dir), 32)
         // derived ONCE (the q221 move): four batch filters consume the
         // embeddings scan
@@ -1690,8 +1677,7 @@ object SimilarityQueries {
       "q109_incremental_pq_codes",
       (s, dir) => {
         val out = Q.scratch(s, "q109_codeidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         // derived ONCE (the q221 move): four batch filters + the ADC
         // search consume the embeddings scan
         val emb = Tables.embeddings(s, dir).localCheckpoint()

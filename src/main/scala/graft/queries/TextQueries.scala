@@ -664,8 +664,7 @@ object TextQueries {
       (s, dir) => {
         import graft.operators.LmIndex
         val out = graft.Q.scratch(s, "q171_lmidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         // derived ONCE (the q221 move): the tokenize + bigram explode
         // ran FIVE times per run (4 batch filters + the scoring probe)
         // — materialize it once and filter blocks
@@ -747,8 +746,7 @@ object TextQueries {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         val out = Q.scratch(s, "q182_streamgate", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        graft.Q.rmrf(new java.io.File(out))
         val allStops = (stop("en") ++ stop("es") ++ stop("de") ++ stop("fr")).distinct
         val nToks = expr(s"size($toksExpr)").cast(DoubleType)
         val alpha = length(regexp_replace(col("text"), "[^a-z]", "")).cast(DoubleType) /
@@ -772,24 +770,15 @@ object TextQueries {
           .where(col("rk") === greatest(expr("(n * 3) div 10"), lit(1L)))
           .select(col("source"), col("score_q").as("cut_q"))
         val in = docs.select("doc_id", "source", "text")
-        def drain(): Unit = {
-          val q = s.readStream.schema(in.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              b.select(col("doc_id"), col("source"), scoreQ.as("score_q"))
-                .join(broadcast(cuts), Seq("source"))
-                .where(col("score_q") >= col("cut_q"))
-                .write.mode("append").parquet(s"$out/kept")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q182 drain did not finish in 300 s")
+        def drain(): Unit =
+          graft.Q.drain(s.readStream.schema(in.schema)
+              .option("maxFilesPerTrigger", "1").parquet(s"$out/in"),
+              s"$out/ckpt") { (b, _) =>
+            b.select(col("doc_id"), col("source"), scoreQ.as("score_q"))
+              .join(broadcast(cuts), Seq("source"))
+              .where(col("score_q") >= col("cut_q"))
+              .write.mode("append").parquet(s"$out/kept")
           }
-        }
         in.where(col("doc_id") % 2 === 0).repartition(2)
           .write.parquet(s"$out/in")
         drain()

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Upsert
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** The reference's daily cron -> upsert -> monthly-rollup loop
@@ -29,20 +28,15 @@ import org.apache.spark.sql.types.StructType
   */
 object IncrementalRollup {
 
-  /** Start the stream. `input` is a streaming DataFrame in coin_history
-    * shape (coin_id, fetch_date, price_usd, ...). */
-  def start(spark: SparkSession, input: DataFrame, tableDir: String,
-            rollupDir: String, checkpointDir: String,
-            availableNow: Boolean = true): StreamingQuery = {
-    val writer = input.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(spark, batch, tableDir, rollupDir)
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
-  }
+  /** Drain the stream through [[graft.Q.drain]] on `checkpointDir`,
+    * merging each micro-batch with [[mergeBatch]], and return once the
+    * drain has finished. `input` is a streaming DataFrame in
+    * coin_history shape (coin_id, fetch_date, price_usd, ...). */
+  def drain(spark: SparkSession, input: DataFrame, tableDir: String,
+            rollupDir: String, checkpointDir: String): Unit =
+    graft.Q.drain(input, checkpointDir) { (batch, _) =>
+      mergeBatch(spark, batch, tableDir, rollupDir)
+    }
 
   /** One micro-batch merge; also usable directly for batch backfills.
     * `read`/`write` plug the storage commit protocol: the default is the

@@ -77,19 +77,15 @@ class IncrementalViewSpec extends AnyFunSuite {
     // the view — a replay re-derives the identical feed (changes reads
     // committed state at fixed bounds) and replaces the same view
     // delta, so every stage is idempotent by batch id
-    def drain(): Unit = spark.readStream.schema(schema).parquet(in)
-      .writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        val bid = id.toInt
-        t.upsert(b.dropDuplicates("k"), bid)
-        IncrementalView.applyFeed(vstore,
-          t.changes(spark, schema, bid - 1, bid, preimage = true)
-            .select(col("grp"), col("op"), col("v")),
-          Seq("grp"), "v", bid)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start().awaitTermination(120000)
+    def drain(): Unit = Q.drain(spark.readStream.schema(schema).parquet(in),
+        s"$root/ckpt") { (b, id) =>
+      val bid = id.toInt
+      t.upsert(b.dropDuplicates("k"), bid)
+      IncrementalView.applyFeed(vstore,
+        t.changes(spark, schema, bid - 1, bid, preimage = true)
+          .select(col("grp"), col("op"), col("v")),
+        Seq("grp"), "v", bid)
+    }
 
     def viewRows: Seq[(String, Double, Long)] =
       IncrementalView.view(spark, vstore, gschema)

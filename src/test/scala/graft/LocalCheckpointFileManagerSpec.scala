@@ -117,18 +117,10 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     val root = tmp()
     val src = s"$root/src"; val ckpt = s"$root/ckpt"; val sink = s"$root/sink"
     Seq(1, 2, 3).toDF("v").write.parquet(s"$src/w1")
-    def drain(): Unit = {
-      val q = spark.readStream
+    def drain(): Unit = Q.drain(spark.readStream
         .schema("v INT").option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/*")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$sink/b$id")
-        }
-        .start()
-      q.awaitTermination()
+        .parquet(s"$src/*"), ckpt) { (b, id) =>
+      b.write.mode("overwrite").parquet(s"$sink/b$id")
     }
     drain()
     Seq(4, 5).toDF("v").write.parquet(s"$src/w2")

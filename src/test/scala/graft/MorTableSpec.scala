@@ -104,13 +104,11 @@ class MorTableSpec extends AnyFunSuite {
     val t = mor(root + "/tbl")
     Seq(("a", 1), ("b", 1)).toDF("k", "v").write.parquet(in)
     val stream = () => spark.readStream.schema(schema).parquet(in)
-    val q1 = t.sink(stream(), root + "/ckpt")
-    q1.awaitTermination(120000)
+    t.sink(stream(), root + "/ckpt")
     assert(rows(t.snapshot(spark, schema)) == Seq(("a", 1), ("b", 1)))
     // second drain from the SAME checkpoint: only the new file, next batch id
     Seq(("a", 9), ("c", 9)).toDF("k", "v").write.mode("append").parquet(in)
-    val q2 = t.sink(stream(), root + "/ckpt")
-    q2.awaitTermination(120000)
+    t.sink(stream(), root + "/ckpt")
     assert(rows(t.snapshot(spark, schema)) ==
       Seq(("a", 9), ("b", 1), ("c", 9)))
   }
@@ -124,11 +122,9 @@ class MorTableSpec extends AnyFunSuite {
     val stream = () => spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(in)
     t.sink(stream(), root + "/ckpt", compactEvery = Some(2))
-      .awaitTermination(120000)
     Seq(("b", 2)).toDF("k", "v").write.mode("append").parquet(in)
     Seq(("a", 3)).toDF("k", "v").write.mode("append").parquet(in)
     t.sink(stream(), root + "/ckpt", compactEvery = Some(2))
-      .awaitTermination(120000)
     // batches 0,1,2 ran; compact fired after batch 1 → base=1 + delta=2
     val names = new java.io.File(tbl).listFiles().map(_.getName).toSet
     assert(names.contains("base=1"), s"expected base=1 in $names")
@@ -267,7 +263,6 @@ class MorTableSpec extends AnyFunSuite {
       .toDF("k", "v", "ver").write.parquet(in)
     t.sink(spark.readStream.schema(vschema).parquet(in), root + "/ckpt",
         orderCol = Some("ver"))
-      .awaitTermination(120000)
     val got = t.snapshot(spark, vschema)
       .select("k", "v").as[(String, Int)].collect().sorted.toSeq
     assert(got == Seq(("a", 30), ("b", 1)),

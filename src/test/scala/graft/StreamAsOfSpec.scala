@@ -3,7 +3,6 @@ package graft
 import graft.operators.AsOfJoin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -52,17 +51,11 @@ class StreamAsOfSpec extends AnyFunSuite {
     val d = dim()
     def drain(): Unit = {
       val sch = spark.read.parquet(inDir).schema
-      val q = spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          AsOfJoin.asofBackwardBroadcast(b, d, "k", "rk", "t", "rt", Seq("rate"))
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
+      Q.drain(spark.readStream.schema(sch)
+          .option("maxFilesPerTrigger", "1").parquet(inDir), ckpt) { (b, _) =>
+        AsOfJoin.asofBackwardBroadcast(b, d, "k", "rk", "t", "rt", Seq("rate"))
+          .write.mode("append").parquet(outDir)
+      }
     }
     drain()
     wave2.toDF("event_id", "k", "t").repartition(2)

@@ -1,9 +1,8 @@
 package graft
 
 import graft.operators.Ewma
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -36,28 +35,22 @@ class StreamEwmaSpec extends AnyFunSuite {
     def emptyState() = Seq.empty[(Long, Long, Double)].toDF("k", "t", "ewma")
     def drain(): Unit = {
       val sch = spark.read.parquet(inDir).schema
-      val q = spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val state =
-            if (new java.io.File(stateDir).exists) spark.read.parquet(stateDir)
-            else emptyState()
-          val out = Ewma.ewmaAppendBatch(b, state, "k", "t", "v", 0.5)
-            .localCheckpoint(true)
-          out.write.mode(SaveMode.Append).parquet(outDir)
-          // state swap via overwrite-to-temp + rename would be the
-          // production move; Overwrite suffices for the spec's
-          // single-writer loop
-          val next = Ewma.mergeState(state, out, "k", "t").localCheckpoint(true)
-          next.write.mode(SaveMode.Overwrite).parquet(s"$stateDir.next")
-          spark.read.parquet(s"$stateDir.next").write
-            .mode(SaveMode.Overwrite).parquet(stateDir)
-        }
-        .start()
-      q.awaitTermination()
+      Q.drain(spark.readStream.schema(sch)
+          .option("maxFilesPerTrigger", "1").parquet(inDir), ckpt) { (b, _) =>
+        val state =
+          if (new java.io.File(stateDir).exists) spark.read.parquet(stateDir)
+          else emptyState()
+        val out = Ewma.ewmaAppendBatch(b, state, "k", "t", "v", 0.5)
+          .localCheckpoint(true)
+        out.write.mode(SaveMode.Append).parquet(outDir)
+        // state swap via overwrite-to-temp + rename would be the
+        // production move; Overwrite suffices for the spec's
+        // single-writer loop
+        val next = Ewma.mergeState(state, out, "k", "t").localCheckpoint(true)
+        next.write.mode(SaveMode.Overwrite).parquet(s"$stateDir.next")
+        spark.read.parquet(s"$stateDir.next").write
+          .mode(SaveMode.Overwrite).parquet(stateDir)
+      }
     }
     drain()
     wave2.toDF("k", "t", "v").coalesce(1).write.mode("append").parquet(inDir)

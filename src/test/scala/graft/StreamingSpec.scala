@@ -99,8 +99,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = spark.readStream
       .schema(spark.read.parquet(in).schema)
       .parquet(in)
-    val q = IncrementalRollup.start(spark, stream, table, rollup, ckpt)
-    q.awaitTermination(120000)
+    IncrementalRollup.drain(spark, stream, table, rollup, ckpt)
     assert(spark.read.parquet(table).count() == 2)
     val r = spark.read.parquet(rollup)
       .select(col("min_price_usd").cast("double"), col("max_price_usd").cast("double"))
